@@ -42,8 +42,8 @@ object Scd {
     // filtered branches of `j`, and Catalyst plans a union of subtree
     // copies as four separate joins — the full-outer join (and the delta
     // derivation under it) executed 4×, and the analysis tree carried
-    // 4 copies (etl_scd2_load RowProbe: 2.1 s summed task / 0.6 s driver
-    // for a 0.3 s job). Each join row instead routes through one
+    // 4 copies (OPTIMIZATION_r18 §6: 2.1 s summed task / 0.6 s driver for
+    // a 0.3 s job). Each join row instead routes through one
     // case-driven explode emitting its 1–2 output rows: unchanged keys
     // and master-only keys pass the current row through, changed keys
     // emit close + re-version, delta-only keys emit the insert. Same

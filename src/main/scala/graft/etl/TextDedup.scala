@@ -34,7 +34,7 @@ object TextDedup {
     // shingle table + both member-expansion joins; sh: the banding pass +
     // both sides of the candidate verification — and un-checkpointed,
     // Catalyst re-evaluated the normalize+groupBy+shingle pipeline once
-    // per consumer (r17 RowProbe: the corpus-prep composite's dominant
+    // per consumer (OPTIMIZATION_r17: the corpus-prep composite's dominant
     // task time was this subtree ×3). Eager checkpoints run each pass
     // exactly once; the materialized forms are the dedup-group table
     // (norm + members, text-sized) and the per-REP shingle arrays (the

@@ -12,8 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * attribute. The declarative form is a deep higher-order tree
   * (sequence → filter → substring/try_element_at per word, then
   * transform → slice → array_join per chunk) that costs real DRIVER time
-  * to analyze/compile in every plan that chunks (the PrepProbe finding:
-  * corpus-prep stage 5's residue was plan/codegen, not data work) and
+  * to analyze/compile in every plan that chunks (CROSSOVER.md "cdc_chunks
+  * goes native": corpus-prep stage 5's residue was plan/codegen, not
+  * data work) and
   * re-walks the words array per chunk at execution. This expression is
   * one linear scan.
   *

@@ -253,7 +253,7 @@ object Bucketed {
     * reads ONLY these files as plain parquet — file-level pruning
     * WITHOUT the per-row InSet filter the engine's own bucket pruning
     * inserts (measured ~10× the plain decode per surviving row —
-    * tools.PruneAB, the r8/r9 negative result). Multi-file buckets
+    * NOTES_r9 §4, the r8/r9 negative result). Multi-file buckets
     * (appends before compaction) group under one id. The listing is
     * served from [[listedBuckets]] when the layout's completion marker
     * is unchanged, so repeated probes of a quiescent index pay one
@@ -333,7 +333,7 @@ object Bucketed {
     tableDirMemo.getOrCompute(s, qname) {
       // catalog metadata API, not DESC FORMATTED + head(): the SQL form
       // launches ~3 tiny executeTake jobs per (memo-missed) resolution —
-      // r18 RowProbe attributed 6 such jobs per fresh session to each
+      // OPTIMIZATION_r18 attributed 6 such jobs per fresh session to each
       // probe row — while getTableMetadata is a pure driver call
       new Path(s.sessionState.catalog.getTableMetadata(
         s.sessionState.sqlParser.parseTableIdentifier(qname)).location)

@@ -138,7 +138,7 @@ object MinHashIndex {
     * bucket(k)'s files, so unselected files cannot hold a match, and
     * selected files' non-matching rows die in the join probe (~12
     * ns/row) — NOT in a per-row InSet filter, whose ~78 ns/row cost
-    * (tools.PruneAB: scan 0.16 → 1.51 s, join 0.59 → 2.85 s at 4.9 k
+    * (NOTES_r9 §4: scan 0.16 → 1.51 s, join 0.59 → 2.85 s at 4.9 k
     * keys on sf24t) made the r8 row-filter form a measured LOSS whenever
     * keys touched a meaningful file fraction — that negative result is
     * why this is FILE-list pruning with no residual filter, which wins

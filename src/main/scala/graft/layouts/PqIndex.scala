@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * is the raw float vectors, persisted cent_id-partitioned alongside, so
   * the exact RE-RANK stage point-fetches shortlist floats from the
   * PROBED cells only — the same pruning the ADC stage gets — instead of
-  * an id-predicate scan over the whole raw corpus. tools/PqServeProbe
+  * an id-predicate scan over the whole raw corpus. CROSSOVER.md round 15
   * measured the difference at the 1 M × 768-dim design point: re-rank
   * 1.0 s/query from the single-file corpus vs ~0.1 s from partitioned
   * floats, at unchanged recall 1.000.

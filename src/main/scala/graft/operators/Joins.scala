@@ -128,7 +128,7 @@ object Joins extends QueryGroup {
 
   /** Single-long-key broadcast lookup with RESIDUAL cross-side
     * equalities — the codified fix for the composite-key probe tax
-    * root-caused this round (tools.Q5Probe4 / NOTES_r7 §6). Catalyst
+    * root-caused this round (NOTES_r7 §6). Catalyst
     * lifts EVERY cross-side equality in a join condition into the
     * equi-key list, which silently switches the broadcast hashed
     * relation from LongHashedRelation (single bigint key — a dense
@@ -616,8 +616,9 @@ object Joins extends QueryGroup {
     * k > 1 and the salted probe path is what the oracle exercises) and
     * returns it alongside the table so the probe enumerates exactly the
     * derived residues. Same SQL oracle — the salt only rewrites
-    * placement; the A/B economics live in tools.SaltProbe
-    * (auto within 5.7 % of the best manual pick, CROSSOVER.md). */
+    * placement; the A/B economics live in CROSSOVER.md "Auto-salt from
+    * observed band occupancy" (auto within 5.7 % of the best manual
+    * pick). */
   private val joinRangeBandedAuto = GraftQuery(
     "join_range_banded_autosalt",
     (s, dir) => {
@@ -649,7 +650,7 @@ object Joins extends QueryGroup {
     * residue (8 candidate keys per row instead of 2). Same SQL oracle —
     * salting only rewrites placement, never membership (the probe's
     * candidate set covers every residue; measured 5.9× on a 75 %-hot
-    * corpus — tools.SaltProbe, CROSSOVER.md). */
+    * corpus — CROSSOVER.md "Hot-band salting: measured"). */
   private val joinRangeBandedSalted = GraftQuery(
     "join_range_banded_salted",
     (s, dir) => {
@@ -841,7 +842,7 @@ object Joins extends QueryGroup {
       // fact stream collapses to (l_suppkey, c_nationkey) partials off
       // the exchange-free SMJ, and supplier/nation join the ~25 k-row
       // aggregate instead of the fact stream. Root cause of the original
-      // slowness (Q5Probe4, r7): the post-join filter c_nationkey =
+      // slowness (NOTES_r7 §6): the post-join filter c_nationkey =
       // s_nationkey folds into the broadcast join's key list, turning the
       // single-long-key LongHashedRelation probe (~12 ns/row dense array
       // lookup) into a COMPOSITE-key UnsafeHashedRelation probe (~80
@@ -935,7 +936,8 @@ object Joins extends QueryGroup {
     * definite non-matches) — the oracle is the plain join; PlanSpec pins
     * the `might_contain` expression into the fact scan's plan.
     *
-    * WHEN THE FILTER IS WORTH INJECTING (tools/BloomProbe, sf6, forced
+    * WHEN THE FILTER IS WORTH INJECTING (CROSSOVER.md "Bloom filter ×
+    * bucketed layout", sf6, forced
     * injection via creationSideThreshold): in the SHUFFLE-JOIN regime it
     * pays exactly as designed — 3.35 → 1.84 s with the fact exchange cut
     * 278.8 → 65.5 MB, because pruned rows never leave the map stage. On

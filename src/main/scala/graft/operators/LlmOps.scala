@@ -69,7 +69,7 @@ object LlmOps extends QueryGroup {
   /** Eagerly checkpointed (r17): every caller consumes the group table
     * at least twice (the rep projection feeding index/score passes AND
     * the member fan-out), and un-checkpointed each consumer re-ran the
-    * full-vector groupBy shuffle (RowProbe: 2–3 evaluations per ANN
+    * full-vector groupBy shuffle (measured: 2–3 evaluations per ANN
     * row). One materialization of the dedup-group table — the stage
     * output a vector pipeline persists anyway. */
   private def vecGroups(vecs: DataFrame): DataFrame =
@@ -473,9 +473,9 @@ object LlmOps extends QueryGroup {
         .withColumn("rep", col("members")(0))
         .select(col("source"), col("rep"), col("members"), col("sh"))
         // three consumers (both self-join sides + intra) each re-ran the
-        // capped-block window + groupBy + shingle extraction (r17
-        // RowProbe: 5.5–7 s task time for a ~1.4 s row) — checkpoint the
-        // block-capped, distinct-sized group table once
+        // capped-block window + groupBy + shingle extraction
+        // (OPTIMIZATION_r17: 5.5–7 s task time for a ~1.4 s row) —
+        // checkpoint the block-capped, distinct-sized group table once
         .stageCheckpoint()
       val a = groups.as("a")
       val b = groups.as("b")
@@ -1280,7 +1280,7 @@ object LlmOps extends QueryGroup {
         .select(col("rep_id"), col("g_size"),
           explode(split(TextOps.normalize(col("text")), " ")).as("term"))
       // tf feeds TWO consumers (df and the scored join) — un-checkpointed
-      // the tokenize/explode/aggregate pass runs twice (r17 RowProbe:
+      // the tokenize/explode/aggregate pass runs twice (OPTIMIZATION_r17:
       // 4.8 s task time for a 1.6 s row). One eager checkpoint of the
       // (rep, term) table — already the collapsed, distinct-sized form —
       // halves the explode volume; groups recompute for the final member
@@ -1383,7 +1383,7 @@ object LlmOps extends QueryGroup {
       // itself read twice — and the final member fan-out) and the trigram
       // stream TWO (profile counts, scoring); un-checkpointed, Catalyst
       // re-evaluates the groupBy per consumer and the extraction — the
-      // row's dominant cost — runs twice (r17 RowProbe: 5.7 s of task
+      // row's dominant cost — runs twice (OPTIMIZATION_r17: 5.7 s of task
       // time for a 1.8 s row). Eager stage checkpoints make each pass
       // run exactly once, the TrainingDataPrep materialization-point
       // rule applied inside one row. At 100 TB these are the stage
@@ -2643,7 +2643,7 @@ object LlmOps extends QueryGroup {
         .select(col("doc_id"), TextOps.normalize(col("text")).as("t"))
       // g feeds FIVE consumers (repbg/c2 via bg, c1, v, the final member
       // fan-out) and three of them are broadcast builds that each re-ran
-      // the dedup groupBy + split from the scan (r17 RowProbe: four
+      // the dedup groupBy + split from the scan (OPTIMIZATION_r17: four
       // concurrent 1.5–1.7 s broadcast jobs, 10.1 s task time for a
       // 3.0 s row). One eager checkpoint of the doc-sized group table —
       // NOT of the distinct-pair table, whose materialization the r7
@@ -3480,7 +3480,7 @@ object LlmOps extends QueryGroup {
       // index scale the re-rank reads nprobe/nlist of the float tier,
       // never an id-predicate scan over the whole raw corpus (measured
       // 10× on re-rank latency at the 768-dim design point,
-      // tools/PqServeProbe). Top-5 over reps covers the true top-5
+      // CROSSOVER.md round 15). Top-5 over reps covers the true top-5
       // (vecGroups proof), then identity groups re-expand and re-rank
       val qDf = docVec(s, dir).filter(col("vec_id") === 0).select(col("v").as("qv"))
       graft.layouts.PqIndex.serve(s, art.floats)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,11 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 object KernelAb {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(sfDir, cpus = 2)
     val norms = graft.Tables.documents(spark, sfDir)
       .select(graft.functions.TextOps.normalize(col("text")).as("n"))
       .collect().map(r => UTF8String.fromString(r.getString(0)))

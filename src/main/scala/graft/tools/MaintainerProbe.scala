@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.layouts.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,12 +56,11 @@ object MaintainerProbe {
 
   private val specName = "mprobe"
 
-  private def session(root: String, staleMs: Long): SparkSession =
-    SparkSession.builder()
+  /** The engine session (local[4], sized to `sfDir`) plus this probe's
+    * layout root and lease keys. */
+  private def session(sfDir: String, root: String, staleMs: Long): SparkSession = {
+    val s = Harness.builder(Harness.inputBytes(sfDir), cpus = 4)
       .appName(s"graft-maintainer-probe-${ProcessHandle.current().pid()}")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
       .config("spark.graft.layout.root", root)
       .config("spark.graft.layout.leaseStaleMs", staleMs.toString)
       // MPROBE_WAIT_MS > 0 turns lease contention into parking (the
@@ -70,6 +69,9 @@ object MaintainerProbe {
       .config("spark.graft.layout.leaseWaitMs",
         sys.env.getOrElse("MPROBE_WAIT_MS", "0"))
       .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   private def slice(df: DataFrame, i: Int) =
     df.filter(pmod(xxhash64(col("o_orderkey")), lit(8)) === i)
@@ -94,7 +96,7 @@ object MaintainerProbe {
     val root = args(1)
     val sfDir = args(2)
     val staleMs = sys.env.getOrElse("MPROBE_STALE_MS", "60000").toLong
-    val s = session(root, staleMs)
+    val s = session(sfDir, root, staleMs)
     val pid = ProcessHandle.current().pid()
     mode match {
       case "prepare" =>

@@ -1,13 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only (r17 optimization round): dump `.explain("formatted")` for a
   * list of registry rows (or bench headline shapes) into
   * `plans/<tag>/<query>_<suffix>.txt` — the before/after plan evidence
   * the optimization round commits next to its measurements. Uses the
-  * bench session config so the dumped plans are the shapes the bench
-  * actually runs.
+  * bench session ([[graft.Harness.session]]) so the dumped plans are the
+  * shapes the bench actually runs.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> <query> [query...]
   */
@@ -18,23 +16,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val dataBytes = Option(new java.io.File(sfDir).listFiles())
-      .map(_.map(_.length).sum).getOrElse(0L)
-    val shufflePartitions =
-      math.max(4, math.min(cpus.toInt, (dataBytes / (32L << 20)).toInt))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (16 * 1024 * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Harness.session(sfDir, cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

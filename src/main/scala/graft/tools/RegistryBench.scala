@@ -1,12 +1,12 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Harness, SparkEntry}
 
 /** Per-query wall-clock for EVERY registry query at an arbitrary scale
   * factor — the round-2 verdict's item 8: "the 94-query sweep is where a
-  * regression would hide". Same session conf + count() methodology as
-  * graft.Bench; one warmup then min of 2 (the registry is 95 queries — a
+  * regression would hide". Same session ([[graft.Harness.session]]),
+  * count() methodology and per-run unpersist ([[graft.Harness.runScoped]])
+  * as graft.Bench; one warmup then min of 2 (the registry is 95 queries — a
   * third run would double-digit-minutes the sweep for ~noise gain).
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.tools.RegistryBench [prefix...]
@@ -19,21 +19,8 @@ object RegistryBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf3")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val dataBytes = Option(new java.io.File(sfDir).listFiles())
-      .map(_.map(_.length).sum).getOrElse(0L)
-    val shufflePartitions =
-      math.max(4, math.min(cpus.toInt, (dataBytes / (32L << 20)).toInt))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (16 * 1024 * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Harness.session(sfDir, cpus)
 
     val selected =
       if (args.isEmpty) SparkEntry.queries.toSeq
@@ -41,10 +28,13 @@ object RegistryBench {
     val timed = selected.sortBy(_._1).map { case (name, fn) =>
       val sec =
         try {
-          fn(spark, sfDir).count() // warmup: plan + codegen (+ any layout build)
+          // warmup: plan + codegen (+ any layout build)
+          Harness.runScoped(spark)(fn(spark, sfDir).count())
           val runs = (1 to 2).map { _ =>
-            val t = System.nanoTime(); fn(spark, sfDir).count()
-            (System.nanoTime() - t) / 1e9
+            Harness.runScoped(spark) {
+              val t = System.nanoTime(); fn(spark, sfDir).count()
+              (System.nanoTime() - t) / 1e9
+            }
           }
           runs.min
         } catch {

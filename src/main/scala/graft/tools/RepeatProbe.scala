@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only (r18): repeat one registry row K times in a bench-identical
   * session and print per-run wall + summed task time. The machine's
@@ -19,23 +18,8 @@ object RepeatProbe {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val dataBytes = Option(new java.io.File(sfDir).listFiles())
-      .map(_.map(_.length).sum).getOrElse(0L)
-    val shufflePartitions =
-      math.max(4, math.min(cpus.toInt, (dataBytes / (32L << 20)).toInt))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (16 * 1024 * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Harness.session(sfDir, cpus)
     val taskNanos = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
@@ -45,16 +29,14 @@ object RepeatProbe {
     var best = Double.MaxValue
     var bestTask = Double.MaxValue
     (1 to reps).foreach { i =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
       taskNanos.set(0L)
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val task = taskNanos.get() / 1e9
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      val (n, wall, task) = graft.Harness.runScoped(spark) {
+        val t0 = System.nanoTime()
+        val n = fn(spark, sfDir).count()
+        val wall = (System.nanoTime() - t0) / 1e9
+        Thread.sleep(200)
+        (n, wall, taskNanos.get() / 1e9)
+      }
       println(f"REPEAT $name run$i wall=$wall%7.3f task=$task%7.3f rows=$n")
       if (wall < best) best = wall
       if (task < bestTask) bestTask = task
