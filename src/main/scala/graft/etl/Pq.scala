@@ -190,24 +190,13 @@ object Pq {
       .drop("_pq_enc")
   }
 
-  /** Reconstruction of a `codes` attribute as a literal-indexing
-    * expression. SMALL-SCALE / TEST USE ONLY: this inlines the full
-    * codebook as literal tables — fine in a spec assertion, but in a hot
-    * projection it is exactly the Janino method-size blowup
-    * [[encodeWithStats]] exists to avoid. */
-  def decodeExpr(codes: Column, books: Seq[Codebook]): Column =
-    concat(books.zipWithIndex.map { case (book, j) =>
-      val table = typedlit(book.sortBy(_._1).map(_._2))
-      element_at(table, element_at(codes, j + 1).cast("int") + 1)
-    }: _*)
-
   /** The ADC (asymmetric distance computation) cosine column over
     * (codes, recon_norm2) attributes — the query-side kernel of an
     * IVF-PQ system (Jégou et al. 2011 §IV), housed with the quantizer it
     * scores against (moved from operators.LlmOps in r16 so the etl-layer
-    * preflight [[AnnPreflight]] can share it; LlmOps forwards): per
-    * subspace, the query's dot against each centroid precomputes
-    * DRIVER-side into an m×k lookup table, and scoring is ONE native
+    * preflight [[AnnPreflight]] can share it; the LlmOps rows call it
+    * directly): per subspace, the query's dot against each centroid
+    * precomputes DRIVER-side into an m×k lookup table, and scoring is ONE native
     * `adc_dot` expression per row — a codegen'd table-lookup loop over
     * the flattened m×k table (functions.AdcDot; r13 — 1.16× per row over
     * the previous m-chained `element_at(typedlit)` nodes and ~3·m fewer

@@ -97,10 +97,6 @@ object VectorLsh {
     vecs.withColumn("bucket", bits.reduce(_ + _))
   }
 
-  /** Candidates within Hamming distance `maxHamming` of the query bucket. */
-  def probe(bucketed: DataFrame, queryBucket: Int, maxHamming: Int): DataFrame =
-    bucketed.filter(bit_count(col("bucket").bitwiseXOR(lit(queryBucket))) <= maxHamming)
-
   /** XOR masks enumerating every bucket within Hamming distance `maxHamming`
     * of any bucket: 0, all single bits, all bit pairs, … — Σ C(nBits, h) for
     * h ≤ maxHamming masks (e.g. 79 at 12 bits / distance 2). Static per

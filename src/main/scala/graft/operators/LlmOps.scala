@@ -65,8 +65,9 @@ object LlmOps extends QueryGroup {
     * contract (one result row per member), so the volume is irreducible;
     * only the single-row width could pinch at, say, 10⁸ copies of one
     * item — at which point collect per (content, member-id mod C) chunk
-    * and expand in two levels to bound the row. */
-  /** Eagerly checkpointed (r17): every caller consumes the group table
+    * and expand in two levels to bound the row.
+    *
+    * Eagerly checkpointed (r17): every caller consumes the group table
     * at least twice (the rep projection feeding index/score passes AND
     * the member fan-out), and un-checkpointed each consumer re-ran the
     * full-vector groupBy shuffle (measured: 2–3 evaluations per ANN
@@ -77,6 +78,87 @@ object LlmOps extends QueryGroup {
       .agg(min(col("vec_id")).as("rep_id"),
         sort_array(collect_list(col("vec_id"))).as("members"))
       .stageCheckpoint()
+
+  /** The ranking of every similarity-search row: (score DESC, vec_id
+    * ASC), a total order under which a top-k over identity-group reps
+    * covers the true top-k (vecGroups). */
+  private def byScore(score: String): Seq[Column] =
+    Seq(col(score).desc_nulls_last, col("vec_id").asc_nulls_first)
+
+  /** Single-query top-k: a TakeOrderedAndProject heap at any scale. */
+  private def topK(df: DataFrame, k: Int, score: String = "cos_sim"): DataFrame =
+    df.orderBy(byScore(score): _*).limit(k)
+
+  /** Batched top-k: the best `k` rows of each `q_id`, numbered `rn`. */
+  private def topKPerQuery(df: DataFrame, k: Int): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(byScore("cos_sim"): _*)))
+      .filter(col("rn") <= k)
+
+  /** Expands a single query's rep top-k (rows carrying the rep's
+    * `members` and `cos_sim`) to member ids and re-ranks them. */
+  private def expandTopK(repTop: DataFrame, k: Int): DataFrame =
+    topK(repTop.select(explode(col("members")).as("vec_id"), col("cos_sim")), k)
+
+  /** [[expandTopK]] per `q_id`: the batched rows' member expansion. */
+  private def expandTopKPerQuery(repTop: DataFrame, k: Int): DataFrame =
+    topKPerQuery(repTop.select(col("q_id"), explode(col("members")).as("vec_id"),
+      col("cos_sim")), k)
+
+  /** Fans each query group's answer `perRep` (q_id = the group's rep)
+    * out to every query id in the group. */
+  private def fanOutQueries(qGrouped: DataFrame, perRep: DataFrame): DataFrame =
+    qGrouped.select(col("rep_id").as("q_id"), col("members").as("q_members"))
+      .join(perRep, "q_id")
+      .select(explode(col("q_members")).as("q_id"),
+        col("rn"), col("vec_id"), col("cos_sim"))
+      .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first)
+
+  /** IVF probe choice against a (cent_id, cv) centroid table: rounded
+    * cosine `c` DESC, ties → lowest cent_id. */
+  private val byCell = Seq(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
+
+  /** Per-query top-`n` cells of each query group's rep, as (q_id, qv). */
+  private def probeCells(qGrouped: DataFrame, cents: DataFrame, n: Int): DataFrame =
+    qGrouped.select(col("rep_id").as("q_id"), col("v").as("qv"))
+      .crossJoin(broadcast(cents))
+      .withColumn("c", cosR("qv", "cv"))
+      .withColumn("pr", row_number().over(Window.partitionBy(col("q_id")).orderBy(byCell: _*)))
+      .filter(col("pr") <= n)
+      .select(col("q_id"), col("cent_id"), col("qv"))
+
+  /** Top-`n` cell ids for the one-row (qv) query `q`. */
+  private def topCells(cents: DataFrame, q: DataFrame, n: Int): DataFrame =
+    cents.crossJoin(broadcast(q))
+      .select(col("cent_id"), cosR("cv", "qv").as("c"))
+      .orderBy(byCell: _*)
+      .limit(n)
+      .select("cent_id")
+
+  /** Vec 0, the query of every single-query row, as (vec_id, v). */
+  private def vec0(s: SparkSession, dir: String): DataFrame =
+    docVec(s, dir).filter(col("vec_id") === 0)
+
+  /** [[vec0]] as the one-row (qv) relation the rows cross-join. */
+  private def queryVec0(s: SparkSession, dir: String): DataFrame =
+    vec0(s, dir).select(col("v").as("qv"))
+
+  /** The planted verification corpus of the IVF/PQ rows: the base
+    * embeddings plus 4 perturbed mutants (ids + 1..4 × 10⁶) of every
+    * (vec_id, v) in `queries` (cos ≥ 0.9 vs ≤ 0.55 background; offsets
+    * as parsed decimal literals, the oracle SQL's binary doubles). The
+    * raw embeddings have no neighborhood structure (top-5 cosines ≈ 0.3)
+    * that a sub-exhaustive index could serve exactly; here each query's
+    * exact top-5 is self + mutants inside its centroid neighborhood, so a
+    * probed search must reproduce the brute-force oracle bit-for-bit. */
+  private def plantedCorpus(s: SparkSession, dir: String, queries: DataFrame): DataFrame = {
+    val planted = Seq("0.005", "0.010", "0.015", "0.020").zipWithIndex.map {
+      case (off, i) =>
+        queries.select((col("vec_id") + lit((i + 1) * 1000000L)).as("vec_id"),
+          transform(col("v"), x => x * lit(0.9) + lit(off.toDouble)).as("v"))
+    }.reduce(_ unionByName _)
+    docVec(s, dir).unionByName(planted)
+  }
 
   /** op 69 — exact dedup: normalize → sha256 → keep min doc_id per hash.
     * groupBy+min instead of a per-hash window: the partial aggregate
@@ -539,12 +621,10 @@ object LlmOps extends QueryGroup {
     "llm_cosine_topk",
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val q = docVec(s, dir).filter(col("vec_id") === 0).select(col("v").as("qv"))
-      docVec(s, dir)
+      val q = queryVec0(s, dir)
+      topK(docVec(s, dir)
         .crossJoin(broadcast(q))
-        .select(col("vec_id"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(11)
+        .select(col("vec_id"), cosR("v", "qv").as("cos_sim")), 11)
     },
     Some("""
       SELECT b.vec_id,
@@ -565,23 +645,15 @@ object LlmOps extends QueryGroup {
       graft.functions.GraftFunctions.register(s)
       val q = docVec(s, dir).filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
       // scan DISTINCT vectors only (vecGroups scaladoc): the scored volume
       // is queries × distinct, and the per-query top-5 REPS cover the true
       // top-5, re-expanded over identity groups and re-ranked
       val grouped = vecGroups(docVec(s, dir))
-      val repTop = grouped.select(col("rep_id").as("vec_id"), col("v"))
+      val repTop = topKPerQuery(grouped.select(col("rep_id").as("vec_id"), col("v"))
         .crossJoin(broadcast(q))
-        .select(col("q_id"), col("vec_id"), cosR("v", "qv").as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select("q_id", "vec_id", "cos_sim")
-      grouped.select(col("rep_id").as("vec_id"), col("members"))
-        .join(repTop, "vec_id")
-        .select(col("q_id"), explode(col("members")).as("vec_id"), col("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
+        .select(col("q_id"), col("vec_id"), cosR("v", "qv").as("cos_sim")), 5)
+      expandTopKPerQuery(grouped.select(col("rep_id").as("vec_id"), col("members"))
+        .join(repTop, "vec_id"), 5)
         .select("q_id", "rn", "vec_id", "cos_sim")
         .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first)
     },
@@ -601,6 +673,13 @@ object LlmOps extends QueryGroup {
       WHERE rn <= 5
       ORDER BY q_id ASC NULLS FIRST, rn ASC NULLS FIRST"""))
 
+  /** The kNN rows' query set: every 100th vector. ONE definition (used
+    * by the corpus planting AND both query bodies) so the planted
+    * structure and the probed queries can never desynchronize; the two
+    * oracle SQL strings mirror it as `vec_id % 100 = 0`. */
+  private def knnQueryVecs(s: SparkSession, dir: String): DataFrame =
+    docVec(s, dir).filter(col("vec_id") % 100 === 0)
+
   /** op 72 scale path — the k-NN join routed through IVF probing instead
     * of a full corpus scan per query batch: train the coarse quantizer once
     * (16 centroids, deterministic Lloyd — graft.etl.Ivf), assign the corpus
@@ -610,65 +689,26 @@ object LlmOps extends QueryGroup {
     * the corpus per query) and take top-5.
     *
     * The oracle is the exact brute-force SQL over the same corpus, so the
-    * pruned plan must reproduce the exact answer bit-for-bit. The raw
-    * testdata embeddings are near-uniform (top-5 cosines ≈ 0.3 — no
-    * neighborhood structure, which no sub-exhaustive index can serve
-    * exactly), so like every near-dup query in this suite the corpus PLANTS
-    * the structure the index exploits: 4 perturbed mutants per query vector
-    * (cos ≥ 0.9 vs ≤ 0.55 background). Each query's true top-5 (self + its
-    * 4 mutants) then shares the query's centroid neighborhood, and genuine
-    * 4/16 probing recovers it exactly. Brute force (`llm_knn_join`) remains
-    * the right shape only for tiny query sets. */
-  /** The kNN rows' query set: every 100th vector. ONE definition (used
-    * by the corpus planting AND both query bodies) so the planted
-    * structure and the probed queries can never desynchronize; the two
-    * oracle SQL strings mirror it as `vec_id % 100 = 0`. */
-  private def knnQueryVecs(s: SparkSession, dir: String): DataFrame =
-    docVec(s, dir).filter(col("vec_id") % 100 === 0)
-
-  /** Planted kNN verification corpus shared by `llm_knn_join_ivf`
-    * (inline index) and `llm_knn_join_ivf_persisted` (resident index):
-    * the base embeddings plus 4 perturbed mutants of every query vector
-    * (cos ≥ 0.9 vs ≤ 0.55 background — mutant offsets as parsed decimal
-    * literals, identical binary doubles to the oracle SQL's constants),
-    * so each query's exact top-5 is self + its mutants and a probed
-    * search must reproduce the brute-force oracle bit-for-bit. */
-  private def knnPlantedCorpus(s: SparkSession, dir: String): DataFrame = {
-    val base = docVec(s, dir)
-    val qIds = knnQueryVecs(s, dir)
-    val planted = Seq("0.005", "0.010", "0.015", "0.020").zipWithIndex.map {
-      case (off, i) =>
-        qIds.select((col("vec_id") + lit((i + 1) * 1000000L)).as("vec_id"),
-          transform(col("v"), x => x * lit(0.9) + lit(off.toDouble)).as("v"))
-    }.reduce(_ unionByName _)
-    base.unionByName(planted)
-  }
-
+    * pruned plan must reproduce the exact answer bit-for-bit: the corpus
+    * is [[plantedCorpus]] over [[knnQueryVecs]], so each query's true
+    * top-5 is self + its 4 mutants, which genuine 4/16 probing recovers
+    * exactly. Brute force (`llm_knn_join`) remains the right shape only
+    * for tiny query sets. */
   private val llmKnnJoinIvf = GraftQuery(
     "llm_knn_join_ivf",
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val qIds = knnQueryVecs(s, dir)
-      val corpus = knnPlantedCorpus(s, dir)
       // index, probe, and score over DISTINCT vectors only (vecGroups
       // scaladoc): duplicate corpus entries multiply every probed bucket
       // and duplicate queries rescan them — dedup-first makes the scored
       // pair volume distinct×distinct, then identity groups re-expand.
-      val grouped = vecGroups(corpus)
+      val grouped = vecGroups(plantedCorpus(s, dir, qIds))
       val reps = grouped.select(col("rep_id").as("vec_id"), col("v"))
       val qGrouped = vecGroups(qIds)
       val cents = graft.etl.Ivf.train(reps, k = 16, iters = 2)
       val assigned = graft.etl.Ivf.assign(reps, cents)
-      val q = qGrouped.select(col("rep_id").as("q_id"), col("v").as("qv"))
-      val wProbe = Window.partitionBy(col("q_id"))
-        .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-      val probes = q.crossJoin(broadcast(cents))
-        .withColumn("c", cosR("qv", "cv"))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 4)
-        .select(col("q_id"), col("cent_id"), col("qv"))
-      val wTop = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
+      val probes = probeCells(qGrouped, cents, 4)
       // top-5 REPS per distinct query vector (covers the true top-5 — see
       // vecGroups), then expand candidate groups, re-rank over member ids,
       // and fan the per-rep answer out to every query id sharing the vector.
@@ -680,25 +720,12 @@ object LlmOps extends QueryGroup {
       // parallelism on this key is bounded by nlist; at corpus scale
       // nlist ≈ √N (16 here for 16 probed buckets of testdata) so the key
       // space exceeds any cluster's cores long before the corpus is big.
-      val repTop = assigned
+      val repTop = topKPerQuery(assigned
         .join(probes, "cent_id")
-        .select(col("q_id"), col("vec_id"), cosR("v", "qv").as("cos_sim"))
-        .withColumn("rn", row_number().over(wTop))
-        .filter(col("rn") <= 5)
-        .select("q_id", "vec_id", "cos_sim")
-      val candExp = grouped.select(col("rep_id").as("vec_id"), col("members"))
-        .join(repTop, "vec_id")
-        .select(col("q_id"), explode(col("members")).as("vec_id"), col("cos_sim"))
-      val wFinal = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-      val perRep = candExp
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= 5)
-      qGrouped.select(col("rep_id").as("q_id"), col("members").as("q_members"))
-        .join(perRep, "q_id")
-        .select(explode(col("q_members")).as("q_id"),
-          col("rn"), col("vec_id"), col("cos_sim"))
-        .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first)
+        .select(col("q_id"), col("vec_id"), cosR("v", "qv").as("cos_sim")), 5)
+      fanOutQueries(qGrouped, expandTopKPerQuery(
+        grouped.select(col("rep_id").as("vec_id"), col("members"))
+          .join(repTop, "vec_id"), 5))
     },
     Some("""
       WITH base AS (
@@ -720,6 +747,18 @@ object LlmOps extends QueryGroup {
         FROM qv q CROSS JOIN corpus c)
       WHERE rn <= 5
       ORDER BY q_id ASC NULLS FIRST, rn ASC NULLS FIRST"""))
+
+  /** The persisted IVF layout `llm_knn_join_ivf_persisted` serves from —
+    * exposed so the bench prewarms it under the IDENTICAL cache key and
+    * reports the one-time build as a separate line item (the
+    * [[persistedIvfIndex]] convention). */
+  def persistedKnnIvfIndex(s: SparkSession, dir: String): (String, String) = {
+    graft.functions.GraftFunctions.register(s)
+    val sig = graft.layouts.LayoutUtil.dataSig(s"$dir/embeddings.parquet")
+    graft.layouts.IvfIndex.ensure(
+      s, s"knnp_${dir}_$sig", plantedCorpus(s, dir, knnQueryVecs(s, dir)),
+      k = 16, iters = 2)
+  }
 
   /** op 72 at its SERVING shape — the k-NN join routed through the
     * PERSISTED IVF index (the corpus's resident cent_id-partitioned
@@ -747,17 +786,6 @@ object LlmOps extends QueryGroup {
     * at which point pruning buys nothing and the right tool is the
     * size-driven batch form `llm_knn_join_ivf` (whose comment explains
     * why a forced broadcast is the shape that dies THERE). */
-  /** The persisted IVF layout `llm_knn_join_ivf_persisted` serves from —
-    * exposed so the bench prewarms it under the IDENTICAL cache key and
-    * reports the one-time build as a separate line item (the
-    * [[persistedIvfIndex]] convention). */
-  def persistedKnnIvfIndex(s: SparkSession, dir: String): (String, String) = {
-    graft.functions.GraftFunctions.register(s)
-    val sig = graft.layouts.LayoutUtil.dataSig(s"$dir/embeddings.parquet")
-    graft.layouts.IvfIndex.ensure(
-      s, s"knnp_${dir}_$sig", knnPlantedCorpus(s, dir), k = 16, iters = 2)
-  }
-
   private val llmKnnJoinIvfPersisted = GraftQuery(
     "llm_knn_join_ivf_persisted",
     (s, dir) => {
@@ -765,37 +793,16 @@ object LlmOps extends QueryGroup {
       val (idxPath, centsPath) = persistedKnnIvfIndex(s, dir)
       val cents = graft.layouts.IvfIndex.serve(s, centsPath)
       val qGrouped = vecGroups(knnQueryVecs(s, dir))
-      val q = qGrouped.select(col("rep_id").as("q_id"), col("v").as("qv"))
-      val wProbe = Window.partitionBy(col("q_id"))
-        .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-      val probes = q.crossJoin(broadcast(cents))
-        .withColumn("c", cosR("qv", "cv"))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 4)
-        .select(col("q_id"), col("cent_id"), col("qv"))
+      val probes = probeCells(qGrouped, cents, 4)
       // the persisted layout: (vec_id = rep, v, members) under cent_id=
       // partition dirs (the partition column reads back type-inferred)
       val idx = graft.layouts.IvfIndex.serve(s, idxPath)
         .select(col("cent_id").cast("long").as("cent_id"),
           col("vec_id"), col("v"), col("members"))
-      val wTop = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-      val repTop = idx.join(broadcast(probes), "cent_id")
+      val repTop = topKPerQuery(idx.join(broadcast(probes), "cent_id")
         .select(col("q_id"), col("vec_id"), col("members"),
-          cosR("v", "qv").as("cos_sim"))
-        .withColumn("rn", row_number().over(wTop))
-        .filter(col("rn") <= 5)
-      val wFinal = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-      val perRep = repTop
-        .select(col("q_id"), explode(col("members")).as("vec_id"), col("cos_sim"))
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= 5)
-      qGrouped.select(col("rep_id").as("q_id"), col("members").as("q_members"))
-        .join(perRep, "q_id")
-        .select(explode(col("q_members")).as("q_id"),
-          col("rn"), col("vec_id"), col("cos_sim"))
-        .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first)
+          cosR("v", "qv").as("cos_sim")), 5)
+      fanOutQueries(qGrouped, expandTopKPerQuery(repTop, 5))
     },
     Some("""
       WITH base AS (
@@ -853,14 +860,11 @@ object LlmOps extends QueryGroup {
       // groups are re-expanded after the banded pass, which is linear in
       // the TRUE output size (all-pairs within an identical group is the
       // specified answer, not overhead).
-      // checkpointed for the same reason as [[vecGroups]] (r17): reps is
-      // read by the count, the router's sample, the banding pass and both
+      // vecGroups' checkpoint matters most here: reps is read by the
+      // count, the router's sample, the banding pass and both
       // verification sides, and grouped again by both member expansions —
       // seven consumers of one groupBy-shuffle subtree
-      val grouped = all.groupBy(col("v"))
-        .agg(min(col("vec_id")).as("rep_id"),
-          sort_array(collect_list(col("vec_id"))).as("members"))
-        .stageCheckpoint()
+      val grouped = vecGroups(all)
       val reps = grouped.select(col("rep_id").as("vec_id"), col("v"))
       // LSH geometry sized from the DISTINCT vector count — the set that
       // is actually bucketed: fixed small bucket counts go quadratic on
@@ -975,30 +979,20 @@ object LlmOps extends QueryGroup {
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
       graft.Fixtures.ivfCentroids(s, dir) // model dump for the DuckDB oracle
-      val vecs = docVec(s, dir)
       // train/assign/score over distinct vectors (vecGroups scaladoc);
       // the top-10 reps cover the true top-10, re-expanded + re-ranked
-      val grouped = vecGroups(vecs)
+      val grouped = vecGroups(docVec(s, dir))
       val reps = grouped.select(col("rep_id").as("vec_id"), col("v"))
       val cents = graft.etl.Ivf.train(reps, k = 16, iters = 2)
       val assigned = graft.etl.Ivf.assign(reps, cents)
-      val q = vecs.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val probes = cents.crossJoin(broadcast(q))
-        .select(col("cent_id"), cosR("cv", "qv").as("c"))
-        .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-        .limit(4)
-        .select("cent_id")
-      val repTop = assigned
+      val q = queryVec0(s, dir)
+      val probes = topCells(cents, q, 4)
+      val repTop = topK(assigned
         .join(broadcast(probes), "cent_id")
         .crossJoin(broadcast(q))
-        .select(col("vec_id"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(10)
-      grouped.select(col("rep_id").as("vec_id"), col("members"))
-        .join(broadcast(repTop), "vec_id")
-        .select(explode(col("members")).as("vec_id"), col("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(10)
+        .select(col("vec_id"), cosR("v", "qv").as("cos_sim")), 10)
+      expandTopK(grouped.select(col("rep_id").as("vec_id"), col("members"))
+        .join(broadcast(repTop), "vec_id"), 10)
     },
     Some("""
       WITH emb AS (
@@ -1037,6 +1031,21 @@ object LlmOps extends QueryGroup {
       ORDER BY cos_sim DESC NULLS LAST, e.vec_id ASC NULLS FIRST
       LIMIT 10"""))
 
+  /** The persisted IVF index layout the `llm_ann_ivf_persisted` row
+    * probes — exposed so the bench prewarms it with the IDENTICAL cache
+    * key and reports the one-time train+partition+write as a separate
+    * line item (the index is the table's resident format; its build is
+    * not the probe query's cost). Returns (indexPath, centroidsPath). */
+  def persistedIvfIndex(s: SparkSession, dir: String): (String, String) = {
+    graft.functions.GraftFunctions.register(s)
+    // per-data-file signature (LayoutUtil.dataSig — the r4 ADVICE fix):
+    // the parquet path is a directory whose own size/mtime can survive an
+    // in-place part-file rewrite
+    val sig = graft.layouts.LayoutUtil.dataSig(s"$dir/embeddings.parquet")
+    graft.layouts.IvfIndex.ensure(
+      s, s"annp_${dir}_$sig", plantedCorpus(s, dir, vec0(s, dir)), k = 16, iters = 2)
+  }
+
   /** IVF ANN over the PERSISTED index layout (layouts.IvfIndex): the
     * vector table is written partitioned by cent_id ONCE (its resident
     * on-disk format at 100 TB), then a probe query filters
@@ -1047,66 +1056,27 @@ object LlmOps extends QueryGroup {
     * here train/assign/write amortize across every query against the
     * table, which is how an ANN index is actually served.
     *
-    * The corpus plants 4 perturbed mutants of the query vector (the
-    * knn_ivf scheme: cos ≥ 0.9 vs ≤ 0.55 background), so the exact top-5
-    * is self + mutants, all inside the query's centroid neighborhood —
-    * the probed search must reproduce the brute-force oracle bit-for-bit.
-    * Index rows are identity-group reps; the top-5 over reps covers the
-    * true top-5 (vecGroups proof), re-expanded then re-ranked. */
-  /** The persisted IVF index layout the `llm_ann_ivf_persisted` row
-    * probes — exposed so the bench prewarms it with the IDENTICAL cache
-    * key and reports the one-time train+partition+write as a separate
-    * line item (the index is the table's resident format; its build is
-    * not the probe query's cost). Returns (indexPath, centroidsPath). */
-  /** The planted ANN verification corpus the persisted indexes store: the
-    * base embeddings plus 4 perturbed mutants of query vec 0 (cos ≥ 0.9
-    * vs ≤ 0.55 background), so the exact top-5 is self + mutants and a
-    * probed search must reproduce the brute-force oracle bit-for-bit —
-    * shared by `llm_ann_ivf_persisted` and `llm_ann_ivfpq_persisted`,
-    * whose DuckDB oracles re-derive the identical corpus in SQL. */
-  private def plantedVecCorpus(s: SparkSession, dir: String): DataFrame = {
-    val base = docVec(s, dir)
-    val planted = Seq("0.005", "0.010", "0.015", "0.020").zipWithIndex.map {
-      case (off, i) =>
-        base.filter(col("vec_id") === 0)
-          .select(lit((i + 1) * 1000000L).as("vec_id"),
-            transform(col("v"), x => x * lit(0.9) + lit(off.toDouble)).as("v"))
-    }.reduce(_ unionByName _)
-    base.unionByName(planted)
-  }
-
-  def persistedIvfIndex(s: SparkSession, dir: String): (String, String) = {
-    graft.functions.GraftFunctions.register(s)
-    // per-data-file signature (LayoutUtil.dataSig — the r4 ADVICE fix):
-    // the parquet path is a directory whose own size/mtime can survive an
-    // in-place part-file rewrite
-    val sig = graft.layouts.LayoutUtil.dataSig(s"$dir/embeddings.parquet")
-    graft.layouts.IvfIndex.ensure(
-      s, s"annp_${dir}_$sig", plantedVecCorpus(s, dir), k = 16, iters = 2)
-  }
-
+    * The corpus is [[plantedCorpus]] over query vec 0 (the knn_ivf
+    * scheme), so the exact top-5 is self + mutants, all inside the
+    * query's centroid neighborhood — the probed search must reproduce
+    * the brute-force oracle bit-for-bit. Index rows are identity-group
+    * reps; the top-5 over reps covers the true top-5 (vecGroups proof),
+    * re-expanded then re-ranked. */
   private val llmAnnIvfPersisted = GraftQuery(
     "llm_ann_ivf_persisted",
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val (idxPath, centsPath) = persistedIvfIndex(s, dir)
-      val q = docVec(s, dir).filter(col("vec_id") === 0).select(col("v").as("qv"))
+      val q = queryVec0(s, dir)
       // probe selection: centroids are k×dims model params (the Ivf.assign
       // pattern) — a 16-row job picks the top-4 probe ids, which enter the
       // scan as LITERALS so Catalyst prunes partitions statically
-      val probeIds = graft.layouts.IvfIndex.serve(s, centsPath).crossJoin(broadcast(q))
-        .select(col("cent_id"), cosR("cv", "qv").as("c"))
-        .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-        .limit(4).collect().map(_.getLong(0)).toSeq
+      val probeIds = topCells(graft.layouts.IvfIndex.serve(s, centsPath), q, 4)
+        .collect().map(_.getLong(0)).toSeq
       val pruned = graft.layouts.IvfIndex.serve(s, idxPath)
         .filter(col("cent_id").isin(probeIds: _*))
-      pruned.crossJoin(broadcast(q))
-        .select(col("vec_id"), col("members"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(5)
-        .select(explode(col("members")).as("vec_id"), col("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(5)
+      expandTopK(topK(pruned.crossJoin(broadcast(q))
+        .select(col("vec_id"), col("members"), cosR("v", "qv").as("cos_sim")), 5), 5)
     },
     Some("""
       WITH base AS (
@@ -1146,12 +1116,10 @@ object LlmOps extends QueryGroup {
       val bucketed = graft.etl.VectorLsh.withBucket(base.unionByName(planted), 8, 64)
       val qRow = bucketed.filter(col("vec_id") === 0)
         .select(col("v").as("qv"), col("bucket").as("qbucket"))
-      bucketed
+      topK(bucketed
         .crossJoin(broadcast(qRow))
         .filter(bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= 1)
-        .select(col("vec_id"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(10)
+        .select(col("vec_id"), cosR("v", "qv").as("cos_sim")), 10)
     },
     Some("""
       WITH base AS (
@@ -2364,9 +2332,10 @@ object LlmOps extends QueryGroup {
     * masks, turning the probe into a broadcast EQUI-join on bucket. Probed
     * fraction: 79/4096 ≈ 2 % of buckets vs single-probe's 9/256 ≈ 3.5 % —
     * finer cells + multi-probe buys a smaller scan at equal recall math
-    * (Lv et al., VLDB'07). Oracle: none (approximate by construction);
-    * VectorSpec pins planted-neighbor recall, the self-match, and that the
-    * probed candidate set is a strict subset of the corpus.
+    * (Lv et al., VLDB'07). Oracled (r6, see the note at the SQL): the
+    * mask join is ≡ a Hamming ≤ 2 filter on the 12-bit sign buckets;
+    * VectorSpec also pins planted-neighbor recall, the self-match, and that
+    * the probed candidate set is a strict subset of the corpus.
     *
     * 100 TB shape: bucketing is map-side; with the corpus PERSISTED
     * partitioned by bucket (the IvfIndex pattern) the 79 probe buckets
@@ -2384,10 +2353,8 @@ object LlmOps extends QueryGroup {
       val bucketed = graft.etl.VectorLsh.withBucket(base.unionByName(planted), 12, 64)
       val qRow = bucketed.filter(col("vec_id") === 0)
         .select(col("v").as("qv"), col("bucket").as("qbucket"))
-      graft.etl.VectorLsh.multiProbe(bucketed, qRow, 12, 2)
-        .select(col("vec_id"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(10)
+      topK(graft.etl.VectorLsh.multiProbe(bucketed, qRow, 12, 2)
+        .select(col("vec_id"), cosR("v", "qv").as("cos_sim")), 10)
     },
     // Oracled (r6): the mask-join form is ≡ a Hamming≤2 filter on the
     // 12-bit sign buckets — same plane fixture as llm_ann_lsh, wider
@@ -3128,20 +3095,6 @@ object LlmOps extends QueryGroup {
     cents.map { case (cid, cv) => (jvmCos(q, cv), cid) }
       .sortBy { case (c, cid) => (-c, cid) }.take(n).map(_._2)
 
-  /** The round-6 ADC cosine column over (codes, recon_norm2) attributes —
-    * implementation moved to [[graft.etl.Pq.adcCosCol]] in r16 (housed
-    * with the quantizer so the etl-layer gradedness preflight and the
-    * layouts-layer index build can share it without a layouts→operators
-    * dependency); this forwarder keeps the operator-surface call sites
-    * (probe tools, parity specs) stable. */
-  private[graft] def adcCosCol(books: Seq[graft.etl.Pq.Codebook], q: Seq[Double]): Column =
-    graft.etl.Pq.adcCosCol(books, q)
-
-  /** Forwarder — see [[graft.etl.Pq.adcTableRow]]. */
-  private[graft] def adcTableRow(book: graft.etl.Pq.Codebook,
-      qj: Seq[Double]): Seq[Double] =
-    graft.etl.Pq.adcTableRow(book, qj)
-
   /** The trained quantizer models the inline ANN rows share: PQ codebooks
     * (m=8, k=16, 4 Lloyd rounds) and IVF coarse centroids (k=16, 2
     * rounds) over the dedup-first representatives of `dir`'s embeddings. */
@@ -3205,7 +3158,8 @@ object LlmOps extends QueryGroup {
     * the train-once cached codebooks ([[pqModels]], prewarmed by the
     * bench as build_pq_model) so the serving path is exercised and
     * spec-pinned (recall containment vs the exact brute-force top-50,
-    * like llm_ann_ivf). Oracle: none (k-means-based). */
+    * like llm_ann_ivf). Oracled (r6, see the note at the SQL) over the
+    * declared codebook fixture. */
   private val llmAnnPqAdc = GraftQuery(
     "llm_ann_pq_adc",
     (s, dir) => {
@@ -3227,12 +3181,10 @@ object LlmOps extends QueryGroup {
       val coded = graft.etl.Pq.encodeWithStats(reps, mdl.dims, books)
         .select(col("vec_id"), col("codes"), col("recon_norm2"))
         .stageCheckpoint()
-      val q = docVec(s, dir).filter(col("vec_id") === 0).head.getSeq[Double](1)
-      coded
-        .withColumn("adc_cos", adcCosCol(books, q))
-        .select(col("vec_id"), col("adc_cos"))
-        .orderBy(col("adc_cos").desc, col("vec_id").asc)
-        .limit(10)
+      val q = vec0(s, dir).head.getSeq[Double](1)
+      topK(coded
+        .withColumn("adc_cos", graft.etl.Pq.adcCosCol(books, q))
+        .select(col("vec_id"), col("adc_cos")), 10, "adc_cos")
     },
     // Oracled (r6): same declared-model-input pattern as llm_embed_pq —
     // the oracle rebuilds the ADC lookup table from the codebook fixture
@@ -3314,22 +3266,19 @@ object LlmOps extends QueryGroup {
       // both quantizers from the shared train-once model cache
       // (build_pq_model): the row measures assign + encode + probed search
       val mdl = pqModels(s, dir)
-      val vecs = docVec(s, dir)
-      val grouped = vecGroups(vecs).stageCheckpoint()
+      val grouped = vecGroups(docVec(s, dir)).stageCheckpoint()
       val reps = grouped.select(col("rep_id").as("vec_id"), col("v"))
       val books = mdl.books
       val indexed = graft.etl.Ivf.assign(reps, centsDf(s, mdl.cents))
       val coded = graft.etl.Pq.encodeWithStats(indexed, mdl.dims, books)
         .select(col("vec_id"), col("cent_id"), col("codes"), col("recon_norm2"))
         .stageCheckpoint()
-      val q = vecs.filter(col("vec_id") === 0).head.getSeq[Double](1)
+      val q = vec0(s, dir).head.getSeq[Double](1)
       val probes = topProbes(mdl.cents, q, 4)
-      coded
+      topK(coded
         .filter(col("cent_id").isin(probes: _*))
-        .withColumn("adc_cos", adcCosCol(books, q))
-        .select(col("vec_id"), col("adc_cos"))
-        .orderBy(col("adc_cos").desc, col("vec_id").asc)
-        .limit(10)
+        .withColumn("adc_cos", graft.etl.Pq.adcCosCol(books, q))
+        .select(col("vec_id"), col("adc_cos")), 10, "adc_cos")
     },
     Some("""
       WITH emb AS (
@@ -3395,7 +3344,7 @@ object LlmOps extends QueryGroup {
     * reports the one-time train+encode+partitioned-write as a separate
     * build line item (the index is the vector table's resident format;
     * its build is not the probe query's cost — the llm_ann_ivf_persisted
-    * accounting). The indexed corpus is [[plantedVecCorpus]] — the same
+    * accounting). The indexed corpus is [[plantedCorpus]] — the same
     * planted-mutant scheme as the persisted IVF index — so the probed
     * search is verifiable against the exact brute-force oracle. The cache
     * tag hashes the source DATA FILES (LayoutUtil.dataSig), not the
@@ -3409,7 +3358,7 @@ object LlmOps extends QueryGroup {
       .select(size(col("embedding"))).head.getInt(0)
     val sig = graft.layouts.LayoutUtil.dataSig(s"$dir/embeddings.parquet")
     graft.layouts.PqIndex.ensure(
-      s, s"ivfpqp_${dir}_$sig", plantedVecCorpus(s, dir), dims)
+      s, s"ivfpqp_${dir}_$sig", plantedCorpus(s, dir, vec0(s, dir)), dims)
   }
 
   /** IVF+PQ over the PERSISTED layout (layouts.PqIndex), completed with
@@ -3450,9 +3399,9 @@ object LlmOps extends QueryGroup {
       val art = pqIndexArtifacts(s, dir)
       // the query vector is already on the driver: subspace geometry
       // derives from it and the loaded codebooks (q.length / books.size
-      // inside adcCosCol) — nothing about m or dims is hardcoded, so a
+      // inside Pq.adcCosCol) — nothing about m or dims is hardcoded, so a
       // PqIndex parameter change cannot desynchronize this row
-      val q = docVec(s, dir).filter(col("vec_id") === 0).head.getSeq[Double](1)
+      val q = vec0(s, dir).head.getSeq[Double](1)
       val probes = topProbes(
         graft.layouts.PqIndex.serve(s, art.cents).collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq, q, 4)
@@ -3460,11 +3409,9 @@ object LlmOps extends QueryGroup {
       // stage 1 — ADC shortlist inside the probed cells only: top-50 reps
       // by m code lookups per row, collected (bounded — 50 reps + member
       // lists, the candidate set a serving node holds in memory)
-      val short = graft.layouts.PqIndex.serve(s, art.codes)
+      val short = topK(graft.layouts.PqIndex.serve(s, art.codes)
         .filter(col("cent_id").isin(probes: _*))
-        .withColumn("adc_cos", adcCosCol(books, q))
-        .orderBy(col("adc_cos").desc, col("vec_id").asc)
-        .limit(50)
+        .withColumn("adc_cos", graft.etl.Pq.adcCosCol(books, q)), 50, "adc_cos")
         .select(col("vec_id"), col("members"))
         .collect()
       val ids = short.map(_.getLong(0)).toSeq
@@ -3482,18 +3429,12 @@ object LlmOps extends QueryGroup {
       // 10× on re-rank latency at the 768-dim design point,
       // CROSSOVER.md round 15). Top-5 over reps covers the true top-5
       // (vecGroups proof), then identity groups re-expand and re-rank
-      val qDf = docVec(s, dir).filter(col("vec_id") === 0).select(col("v").as("qv"))
-      graft.layouts.PqIndex.serve(s, art.floats)
+      expandTopK(topK(graft.layouts.PqIndex.serve(s, art.floats)
         .filter(col("cent_id").isin(probes: _*))
         .filter(col("vec_id").isin(ids: _*))
         .join(broadcast(shortDf), "vec_id")
-        .crossJoin(broadcast(qDf))
-        .select(col("vec_id"), col("members"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(5)
-        .select(explode(col("members")).as("vec_id"), col("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(5)
+        .crossJoin(broadcast(queryVec0(s, dir)))
+        .select(col("vec_id"), col("members"), cosR("v", "qv").as("cos_sim")), 5), 5)
     },
     Some("""
       WITH base AS (

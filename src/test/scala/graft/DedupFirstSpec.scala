@@ -156,26 +156,47 @@ class DedupFirstSpec extends AnyFunSuite with SparkTestBase {
         .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first))
   }
 
-  test("llm_knn_join_ivf == exact brute force over the planted corpus (replicas)") {
+  /** The base vectors plus 4 perturbed mutants of each of `queries` —
+    * the planted corpus the IVF/PQ rows index. */
+  private def planted(base: DataFrame, queries: DataFrame): DataFrame =
+    base.unionByName(Seq("0.005", "0.010", "0.015", "0.020").zipWithIndex.map {
+      case (off, i) =>
+        queries.select((col("vec_id") + lit((i + 1) * 1000000L)).as("vec_id"),
+          transform(col("v"), x => x * lit(0.9) + lit(off.toDouble)).as("v"))
+    }.reduce(_ unionByName _))
+
+  // the inline and the persisted IVF index must both serve the exact answer
+  Seq("llm_knn_join_ivf", "llm_knn_join_ivf_persisted").foreach { row =>
+    test(s"$row == exact brute force over the planted corpus (replicas)") {
+      graft.functions.GraftFunctions.register(spark)
+      val base = docVec(dir)
+      val qIds = base.filter(col("vec_id") % 100 === 0)
+      val q = qIds.select(col("vec_id").as("q_id"), col("v").as("qv"))
+      val w = Window.partitionBy(col("q_id"))
+        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
+      assertSame(row,
+        planted(base, qIds).crossJoin(broadcast(q))
+          .select(col("q_id"), col("vec_id"), cosR("v", "qv").as("cos_sim"))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= 5)
+          .select("q_id", "rn", "vec_id", "cos_sim")
+          .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first))
+    }
+  }
+
+  test("persisted IVF and IVF-PQ single-query rows == exact top-5 over the planted corpus (replicas)") {
     graft.functions.GraftFunctions.register(spark)
     val base = docVec(dir)
-    val qIds = base.filter(col("vec_id") % 100 === 0)
-    val planted = Seq("0.005", "0.010", "0.015", "0.020").zipWithIndex.map {
-      case (off, i) =>
-        qIds.select((col("vec_id") + lit((i + 1) * 1000000L)).as("vec_id"),
-          transform(col("v"), x => x * lit(0.9) + lit(off.toDouble)).as("v"))
-    }.reduce(_ unionByName _)
-    val corpus = base.unionByName(planted)
-    val q = qIds.select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val w = Window.partitionBy(col("q_id"))
+    val vec0 = base.filter(col("vec_id") === 0)
+    val exact = planted(base, vec0)
+      .crossJoin(broadcast(vec0.select(col("v").as("qv"))))
+      .select(col("vec_id"), cosR("v", "qv").as("cos_sim"))
       .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-    assertSame("llm_knn_join_ivf",
-      corpus.crossJoin(broadcast(q))
-        .select(col("q_id"), col("vec_id"), cosR("v", "qv").as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select("q_id", "rn", "vec_id", "cos_sim")
-        .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first))
+      .limit(5)
+    // vec 0's identity group {0, off, 2·off} leads the answer: a row that
+    // returned reps without expanding them would return the mutants instead
+    assert(rows(exact).take(repl).map(_.head) == (0 until repl).map(_ * keyOff))
+    Seq("llm_ann_ivf_persisted", "llm_ann_ivfpq_persisted").foreach(assertSame(_, exact))
   }
 
   test("llm_chunk_dedup == straightforward per-doc formulation on a replica corpus") {

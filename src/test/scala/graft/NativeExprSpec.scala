@@ -361,7 +361,7 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
     val q = vecs.filter(col("vec_id") === 3).head.getSeq[Double](1)
     val sub = models.dims / models.books.size
     val tables = models.books.zipWithIndex.map { case (book, j) =>
-      graft.operators.LlmOps.adcTableRow(book, q.slice(j * sub, (j + 1) * sub))
+      graft.etl.Pq.adcTableRow(book, q.slice(j * sub, (j + 1) * sub))
     }
     // the r6–r12 composition, verbatim: m chained element_at over the
     // per-subspace typedlit tables, left-fold sum
